@@ -22,11 +22,10 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // the canonical GraftSession config (AQE + scale-out initial
     // partition count) so the benched plans are the shipped plans
-    val spark = GraftSession.get(cpus.toInt)
+    val spark = GraftSession.get()
 
     def exec(name: String): Double = {
       val fn = SparkEntry.queries(name) // lookup outside the timed region

@@ -9,15 +9,13 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.all.map(_.name)
-    // SPARK_GRAFT_CPUS (default 4) so captured plans reflect the bench
-    // session's parallelism — scale-adaptive operators (Spread.across)
-    // plan differently at different session widths by design
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the CANONICAL session config (r14): captured plans must reflect
-    // the bench/production session — a privately-configured session
-    // here silently diverged from GraftSession when r14 added an
-    // optimizer-rule exclusion
-    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
+    // the CANONICAL session config and core count (r14): captured plans
+    // must reflect the bench/production session — scale-adaptive
+    // operators (Spread.across) plan differently at different session
+    // widths by design, and a privately-configured session here silently
+    // diverged from GraftSession when r14 added an optimizer-rule
+    // exclusion
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

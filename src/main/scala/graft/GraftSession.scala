@@ -114,6 +114,11 @@ object GraftExtensions {
 /** Canonical session factory: the configuration every entry point
   * (Verify/Bench/Demo/user code) should run with. */
 object GraftSession {
+  /** The one core-count rule for every entry point that is not given a
+    * count: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** `shuffle.partitions` = cores keeps small-corpus plans lean, but a
     * FIXED task count is exactly what breaks a 10× scale-up: every
     * shuffle task carries 10× the rows, blows its memory fraction, and
@@ -130,7 +135,7 @@ object GraftSession {
     * 8× cores), while the 5M-doc harness sets it high
     * ([[ScaleBench]]) and measures the spill relief directly. On a
     * cluster, size it to the LARGEST shuffle, never to core count. */
-  def builder(cores: Int = 32): SparkSession.Builder = {
+  def builder(cores: Int = defaultCores): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
@@ -168,7 +173,7 @@ object GraftSession {
     b
   }
 
-  def get(cores: Int = 32): SparkSession = {
+  def get(cores: Int = defaultCores): SparkSession = {
     val s = builder(cores).getOrCreate()
     GraftExtensions.register(s) // in case getOrCreate reused a session
     s.sparkContext.setLogLevel("WARN")

@@ -25,10 +25,9 @@ object Verify {
     // only — the driver always dumps the full set)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the canonical GraftSession config, so correctness runs exercise
     // the same plans (AQE, partition scaling, SQL functions) as users
-    val spark = GraftSession.get(cpus.toInt)
+    val spark = GraftSession.get()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

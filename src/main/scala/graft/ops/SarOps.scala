@@ -144,9 +144,12 @@ object SarOps {
 
   // ---- P8/P9: probes ------------------------------------------------
 
+  /** The file's `Linux` banner line; "" when it has none, the value the
+    * parser stores for such a file. */
   def osDetails(df: DataFrame): String =
     df.filter(col("os_details").contains("Linux"))
-      .select("os_details").head().getString(0)
+      .select("os_details").limit(1).collect().headOption
+      .map(_.getString(0)).getOrElse("")
 
   /** Restart strings, schema-safe (reference pl_helpers2.py:227-235). */
   def restartHeaders(df: DataFrame): Seq[String] =
@@ -165,7 +168,7 @@ object SarOps {
   def restartTimestamps(df: DataFrame): Seq[Timestamp] = {
     val rs = restartHeaders(df)
     // early exit keeps osDetails lazy: restart-less files pay no extra
-    // head() job and a frame without an os_details row can't throw here
+    // head() job
     if (rs.isEmpty) Seq.empty else parseRestartTimestamps(rs, osDetails(df))
   }
 

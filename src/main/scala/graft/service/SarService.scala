@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.{SarTextParser, XzIngest}
 import graft.meta.HeaderMeta
+import graft.model.SarLine
 import graft.ops.SarOps
 import graft.stats.DescribeStats
 
@@ -26,21 +27,42 @@ final case class TableMeta(header: String, alias: String,
 final case class HeaderDetail(header: String, alias: String,
     deviceScoped: Boolean, devices: Seq[String])
 
+/** One stored file's catalog: the cached long frame plus everything a
+  * read needs to know about the file besides its rows — row count,
+  * sorted headers, the plainly sorted devices of each device-scoped
+  * header, the parser's os_details ("" for a file without a `Linux`
+  * banner) and its restart strings. Built once per load, dropped with
+  * the frame: none of it can change until the file is re-uploaded. */
+private final case class FileCatalog(df: DataFrame, rows: Long,
+    headers: Seq[String], devices: Map[String, Seq[String]],
+    osDetails: String, restartLines: Seq[String]) {
+  /** Parsed on first use, so a restart string that does not parse fails
+    * the restart routes only, not every read of the file. */
+  lazy val restarts: Seq[Timestamp] =
+    SarOps.parseRestartTimestamps(restartLines, osDetails)
+
+  /** Alias-or-header → a header of this file (the path getTable and the
+    * header routes share). */
+  def resolve(name: String, aliasOrHeader: String): String = {
+    val header =
+      if (headers.contains(aliasOrHeader)) aliasOrHeader
+      else HeaderMeta.aliasToHeader(aliasOrHeader, headers)
+    require(headers.contains(header),
+      s"header or alias '$aliasOrHeader' not found in $name")
+    header
+  }
+
+  def detail(h: String): HeaderDetail =
+    HeaderDetail(h, HeaderMeta.alias(h), HeaderMeta.isDeviceScoped(h),
+      SarOps.sortDevices(devices.getOrElse(h, Nil)))
+}
+
 class SarService(spark: SparkSession, storageDir: String) {
   import spark.implicits._
 
   Files.createDirectories(Paths.get(storageDir))
   // concurrent: this layer backs a REST surface (parallel load/upload)
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // per-file row counts: known for free at upload, computed at most once
-  // for pre-existing files; keeps statistics() from re-running its whole
-  // pivot pipeline just to pick a describe engine
-  private val rowCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  /** The stored file's row count, cached: upload knows it from the parse,
-    * anything else pays one count() on the (cached) parquet frame. */
-  private def fileRows(name: String): Long =
-    rowCounts.computeIfAbsent(validated(name), n => load(n).count())
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, FileCatalog]()
 
   /** Storage-name guard mirroring the reference's _validate_file_name
     * (api/services.py:39,73-77): ^[A-Za-z0-9._-]+$, no leading dot.
@@ -55,18 +77,18 @@ class SarService(spark: SparkSession, storageDir: String) {
 
   /** Upload lifecycle (api/services.py:94-156): preprocess (xz → sadf-JSON
     * → text), eager parse, parquet materialization. */
-  def upload(path: String, name: String): FileInfo = {
-    val text = XzIngest.readSarFile(path)
-    val rows = SarTextParser.parseContent(text)
-    val ds = spark.createDataset(rows)
+  def upload(path: String, name: String): FileInfo =
+    store(name, SarTextParser.parseContent(XzIngest.readSarFile(path)))
+
+  /** Writes parsed rows as the stored file `name` and drops its catalog. */
+  private def store(name: String, rows: Seq[SarLine]): FileInfo = {
     val target = s"$storageDir/${validated(name)}.parquet"
-    ds.write.mode("overwrite").parquet(target)
+    spark.createDataset(rows).write.mode("overwrite").parquet(target)
     // drop BOTH cache layers or a re-upload serves stale rows: our map
     // AND Spark's plan cache (InMemoryFileIndex matches by root path)
-    Option(cache.remove(name)).foreach(_.unpersist())
+    Option(cache.remove(name)).foreach(_.df.unpersist())
     spark.catalog.refreshByPath(target)
-    rowCounts.put(name, rows.length.toLong)
-    FileInfo(name, rows.length, rows.map(_.header).distinct)
+    FileInfo(name, rows.length, rows.map(_.header).distinct.sorted)
   }
 
   def listFiles(): Seq[String] =
@@ -75,42 +97,65 @@ class SarService(spark: SparkSession, storageDir: String) {
       .toSeq.sorted
 
   /** Parse-once load with in-memory caching (S4; Redis layer dropped). */
-  def load(name: String): DataFrame = cache.computeIfAbsent(validated(name),
-    _ => spark.read.parquet(s"$storageDir/$name.parquet").cache())
+  def load(name: String): DataFrame = catalog(name).df
+
+  /** The file's catalog, built on first use. The build runs inside
+    * computeIfAbsent, so concurrent first reads of one name pay it once;
+    * it must not touch `cache` itself (a recursive update throws). */
+  private def catalog(name: String): FileCatalog =
+    cache.computeIfAbsent(validated(name), buildCatalog)
+
+  /** Three collects over the cached frame: rows per header, the distinct
+    * (header, first data token) pairs of the device-scoped headers, and
+    * the os_details/restart rows. The first one also fills the cache. */
+  private def buildCatalog(name: String): FileCatalog = {
+    val df = spark.read.parquet(s"$storageDir/$name.parquet").cache()
+    try {
+      val counts = df.groupBy("header").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1))
+      val headers = counts.map(_._1).toSeq.sorted
+      val scoped = headers.filter(HeaderMeta.isDeviceScoped)
+      val devices =
+        if (scoped.isEmpty) Map.empty[String, Seq[String]]
+        else df.filter(col("header").isin(scoped: _*))
+          .select(col("header"), element_at(split(col("data"), " "), 1))
+          .distinct().collect()
+          .groupMap(_.getString(0))(_.getString(1))
+          .map { case (h, ds) => h -> ds.toSeq.sorted }
+      val meta = df
+        .filter(col("os_details").contains("Linux") ||
+          col("restart").contains("RESTART"))
+        .select("os_details", "restart").collect()
+      val osDetails = meta.map(_.getString(0)).find(_.contains("Linux"))
+        .getOrElse("")
+      val restartLines = meta.map(_.getString(1))
+        .filter(_.contains("RESTART")).toSeq
+      FileCatalog(df, counts.map(_._2).sum, headers, devices, osDetails,
+        restartLines)
+    } catch { case e: Throwable => df.unpersist(); throw e }
+  }
 
   def fileInfo(name: String): FileInfo = {
-    val df = load(name)
-    FileInfo(name, df.count(), SarOps.headers(df))
+    val c = catalog(name)
+    FileInfo(name, c.rows, c.headers)
   }
 
   def headerDetails(name: String): Seq[HeaderDetail] = {
-    val df = load(name)
-    SarOps.headers(df).map(mkDetail(df, _))
+    val c = catalog(name)
+    c.headers.map(c.detail)
   }
 
   /** Details for ONE header, alias accepted — resolved through the SAME
     * path as getTable, so any header string getTable accepts, this
-    * accepts (and it computes the sub-device distinct for that single
-    * header, not one Spark job per header in the file). */
+    * accepts. */
   def headerDetail(name: String, aliasOrHeader: String): HeaderDetail = {
-    val df = load(name)
-    val fileHeaders = SarOps.headers(df)
-    val header =
-      if (fileHeaders.contains(aliasOrHeader)) aliasOrHeader
-      else HeaderMeta.aliasToHeader(aliasOrHeader, fileHeaders)
-    require(fileHeaders.contains(header),
-      s"header or alias '$aliasOrHeader' not found in $name")
-    mkDetail(df, header)
+    val c = catalog(name)
+    c.detail(c.resolve(name, aliasOrHeader))
   }
 
-  private def mkDetail(df: DataFrame, h: String): HeaderDetail = {
-    val scoped = HeaderMeta.isDeviceScoped(h)
-    val devices = if (scoped) {
-      val m = SarOps.toMetrics(SarOps.selectHeader(df, h), h, Some(true))
-      SarOps.sortDevices(SarOps.subDevices(m))
-    } else Nil
-    HeaderDetail(h, HeaderMeta.alias(h), scoped, devices)
-  }
+  /** The file's os_details line as the parser stored it ("" when the
+    * file has no `Linux` banner). */
+  def osDetails(name: String): String = catalog(name).osDetails
 
   /** services.get_table (api/services.py:310-338): alias-or-header
     * resolution (J1/J2), section slice (P1), metric arrays (A1-A4),
@@ -150,24 +195,19 @@ class SarService(spark: SparkSession, storageDir: String) {
       device: Option[String] = None,
       start: Option[Timestamp] = None, end: Option[Timestamp] = None,
       metrics: Seq[String] = Nil): (DataFrame, TableMeta) = {
-    val df = load(name)
-    val fileHeaders = SarOps.headers(df)
-    val header =
-      if (fileHeaders.contains(aliasOrHeader)) aliasOrHeader
-      else HeaderMeta.aliasToHeader(aliasOrHeader, fileHeaders)
-    require(fileHeaders.contains(header),
-      s"header or alias '$aliasOrHeader' not found in $name")
+    val c = catalog(name)
+    val header = c.resolve(name, aliasOrHeader)
     val alias = HeaderMeta.alias(header)
     val scoped = HeaderMeta.isDeviceScoped(header)
 
-    var m = SarOps.toMetrics(SarOps.selectHeader(df, header), header, Some(scoped))
+    var m = SarOps.toMetrics(SarOps.selectHeader(c.df, header), header, Some(scoped))
     var effectiveDevice: Option[String] = None
     if (scoped) {
       // reference get_table uses frames[0]: CPU-like collapse to 'all',
       // other device sections default to the first device in plain sort
       // order; an explicit unknown device is an error
       // (api/services.py:283-307)
-      val devices = SarOps.subDevices(m).sorted
+      val devices = c.devices.getOrElse(header, Nil)
       val dev = device match {
         case Some(d) =>
           require(devices.contains(d),
@@ -225,8 +265,7 @@ class SarService(spark: SparkSession, storageDir: String) {
     } finally {
       // the cache entry dies even on a failed/partial delete — a stale
       // frame would keep serving a file that is partially gone on disk
-      rowCounts.remove(name)
-      Option(cache.remove(name)).foreach(_.unpersist())
+      Option(cache.remove(name)).foreach(_.df.unpersist())
       if (existed) spark.catalog.refreshByPath(target.toString)
     }
     existed
@@ -282,8 +321,7 @@ class SarService(spark: SparkSession, storageDir: String) {
 
   /** Restart (reboot) timestamps of a file — the engine-side data E4's
     * chart markers consume. */
-  def restarts(name: String): Seq[Timestamp] =
-    SarOps.restartTimestamps(load(name))
+  def restarts(name: String): Seq[Timestamp] = catalog(name).restarts
 
   /** S13 upload: store under the reference's rename convention
     * `<upload date>_<hostname>_<sar date>` derived from the parsed
@@ -293,18 +331,10 @@ class SarService(spark: SparkSession, storageDir: String) {
   def uploadWithConvention(path: String,
       uploadDate: java.time.LocalDate = java.time.LocalDate.now())
       : FileInfo = {
-    val text = XzIngest.readSarFile(path)
-    val rows = SarTextParser.parseContent(text)
+    val rows = SarTextParser.parseContent(XzIngest.readSarFile(path))
     require(rows.nonEmpty, s"$path parsed to zero SAR rows")
-    val name = SarNaming.uploadName(rows.head.os_details,
-      uploadDate.toString)
-    val ds = spark.createDataset(rows)
-    val target = s"$storageDir/${validated(name)}.parquet"
-    ds.write.mode("overwrite").parquet(target)
-    Option(cache.remove(name)).foreach(_.unpersist())
-    spark.catalog.refreshByPath(target)
-    rowCounts.put(name, rows.length.toLong)
-    FileInfo(name, rows.length, rows.map(_.header).distinct)
+    store(SarNaming.uploadName(rows.head.os_details, uploadDate.toString),
+      rows)
   }
 
   /** J7: per-file restart markers for a multi-file view, gated by the
@@ -319,17 +349,9 @@ class SarService(spark: SparkSession, storageDir: String) {
     * files, no cross-attribution ever. */
   def restartsByFile(files: Seq[String]): Map[String, Seq[Timestamp]] = {
     files.map { f =>
-      val df = load(f)
-      val rs = SarOps.restartHeaders(df)
-      val ts =
-        if (rs.isEmpty) Seq.empty[Timestamp]
-        else {
-          val od = SarOps.osDetails(df)
-          if (SarNaming.matchesFile(f, od))
-            SarOps.parseRestartTimestamps(rs, od)
-          else Seq.empty[Timestamp]
-        }
-      f -> ts
+      val c = catalog(f)
+      val own = c.restartLines.nonEmpty && SarNaming.matchesFile(f, c.osDetails)
+      f -> (if (own) c.restarts else Seq.empty[Timestamp])
     }.toMap
   }
 
@@ -375,7 +397,7 @@ class SarService(spark: SparkSession, storageDir: String) {
     // Only a file that is itself over the limit pays the bounded probe
     // (≤ limit+1 rows scanned), since its filtered slice may still be
     // small enough for the exact engine.
-    val small = fileRows(name) <= exactDescribeRowLimit ||
+    val small = catalog(name).rows <= exactDescribeRowLimit ||
       table.limit(exactDescribeRowLimit.toInt + 1).count() <=
         exactDescribeRowLimit
     val stats = if (small) DescribeStats.describe(table, cols)
@@ -399,7 +421,7 @@ class SarService(spark: SparkSession, storageDir: String) {
     * semantics via set intersection). */
   def commonHeaders(files: Seq[String]): Seq[String] = {
     require(files.nonEmpty, "no files selected")
-    files.map(f => SarOps.headers(load(f)).toSet).reduce(_ intersect _)
+    files.map(f => catalog(f).headers.toSet).reduce(_ intersect _)
       .toSeq.sorted
   }
 

@@ -143,7 +143,7 @@ private[service] object ServicePayloads {
     ListMap("header" -> meta.header, "alias" -> meta.alias,
       "device" -> meta.device, "metric" -> metric.orNull,
       "title" -> chartTitle,
-      "os_details" -> SarOps.osDetails(svc.load(name)).trim,
+      "os_details" -> svc.osDetails(name).trim,
       "restarts" -> svc.restarts(name).map(fmtTs),
       "y_range" -> yRangeField(SarOps.yRange(table, valueCols)),
       "rows" -> n, "step" -> step, "points" -> rows.length,

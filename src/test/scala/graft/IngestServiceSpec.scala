@@ -421,4 +421,79 @@ class IngestServiceSpec extends AnyFunSuite {
     assert(withZeros.filter("date = timestamp'2023-06-05 00:15:30'")
       .collect().head.getFloat(1) == 0.0f)
   }
+
+  test("per-file catalog: warm metadata reads start no Spark job, " +
+      "re-upload and delete drop it") {
+    import org.apache.spark.GraftListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val storage = Files.createTempDirectory("graft_catalog").toString
+    val svc = new SarService(spark, storage)
+    val day = Files.createTempFile("sa_cat", ".txt")
+    Files.writeString(day, resource("sa_24h.txt"))
+    svc.upload(day.toString, "cat")
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Any): Int = {
+      GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      jobs.set(0)
+      f
+      GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      // the first read builds the catalog; later metadata reads are free
+      val before = svc.fileInfo("cat")
+      assert(jobsOf(svc.fileInfo("cat")) == 0)
+      assert(jobsOf(svc.headerDetails("cat")) == 0)
+      assert(jobsOf(svc.headerDetail("cat", "Block Devices")) == 0)
+      assert(jobsOf {
+        svc.restarts("cat"); svc.restartsByFile(Seq("cat"))
+        svc.commonHeaders(Seq("cat"))
+      } == 0)
+      // a table read starts only the jobs of its own collect: header,
+      // alias and device resolution add none
+      svc.getTableWithMeta("cat", "Block Devices")._1.collect()
+      val table = svc.getTableWithMeta("cat", "Block Devices")._1
+      val own = jobsOf(table.collect())
+      assert(own > 0)
+      assert(jobsOf(svc.getTableWithMeta("cat", "Block Devices")._1
+        .collect()) == own)
+
+      val truth24h = SarTextParser.parseContent(resource("sa_24h.txt"))
+      assert(before.rows == truth24h.length)
+      assert(before.headers == truth24h.map(_.header).distinct.sorted)
+      assert(svc.headerDetail("cat", "Block Devices").devices ==
+        Seq("dev8-0", "dev8-1"))
+
+      // re-upload with another section set: the new headers, devices
+      // and row count are served, not the cached ones
+      val ampm = Files.createTempFile("sa_cat2", ".txt")
+      Files.writeString(ampm, resource("sa_ampm.txt"))
+      svc.upload(ampm.toString, "cat")
+      val truthAmPm = SarTextParser.parseContent(resource("sa_ampm.txt"))
+      val after = svc.fileInfo("cat")
+      assert(after.rows == truthAmPm.length)
+      assert(after.headers == truthAmPm.map(_.header).distinct.sorted)
+      assert(svc.headerDetails("cat").map(_.header) == after.headers)
+      assert(svc.headerDetail("cat", "CPU").devices == Seq("all"))
+      intercept[IllegalArgumentException] {
+        svc.headerDetail("cat", "Block Devices")
+      }
+      assert(svc.restarts("cat").isEmpty)
+
+      // after delete nothing stale is served
+      assert(svc.delete("cat"))
+      assert(svc.listFiles().isEmpty)
+      intercept[Exception](svc.fileInfo("cat"))
+      intercept[Exception](svc.headerDetails("cat"))
+      intercept[Exception](svc.restarts("cat"))
+      svc.upload(day.toString, "cat")
+      assert(svc.fileInfo("cat") == before)
+    } finally spark.sparkContext.removeSparkListener(counter)
+  }
 }

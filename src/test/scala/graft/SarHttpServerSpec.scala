@@ -248,6 +248,33 @@ class SarHttpServerSpec extends AnyFunSuite {
     } finally server.stop()
   }
 
+  test("PUT and GET /files/{name} agree on headers; no banner is no 500") {
+    val base = Files.createTempDirectory("graft_catalog_http").toString
+    val tenants = new SarTenants(spark, base)
+    val server = new SarHttpServer(tenants)
+    val port = server.start()
+    val root = s"http://localhost:$port/api/v1"
+    try {
+      // the upload response and the file-info read carry one header order
+      val (sp, put) = send("PUT", s"$root/files/day1",
+        resource("sa_24h.txt").getBytes("UTF-8"))
+      assert(sp == 201, put)
+      val (sg, info, _) = get(s"$root/files/day1")
+      assert(sg == 200 && info == put)
+
+      // a file without its `Linux` banner line: the parser stores an empty
+      // os_details, and the chart carries it instead of failing
+      val bare = resource("sa_24h.txt").linesWithSeparators
+        .filterNot(_.startsWith("Linux")).mkString
+      assert(send("PUT", s"$root/files/bare", bare.getBytes("UTF-8"))._1 == 201)
+      val (sc, chart) = send("POST", s"$root/charts/single",
+        """{"file":"bare","header":"CPU"}""".getBytes("UTF-8"))
+      assert(sc == 200, chart)
+      assert(chart.contains(""""os_details":"""""))
+      assert(chart.contains(""""restarts":["2000-01-01 00:15:30"]"""))
+    } finally server.stop()
+  }
+
   test("password hashes are wire-compatible with the reference's format") {
     import graft.service.SarAuth
     // generated by the reference's exact recipe (code/hashing.py:13-30,

@@ -74,6 +74,13 @@ class SarOpsSpec extends AnyFunSuite {
   test("restart probes + zero-row insertion") {
     val restarts = SarOps.restartHeaders(sar.toDF())
     assert(restarts.length == 1 && restarts.head.endsWith("00:15:30"))
+    // a frame without a `Linux` banner row: the parser's "" and the
+    // default day, not an exception
+    val bare = sar.toDF()
+      .withColumn("os_details", org.apache.spark.sql.functions.lit(""))
+    assert(SarOps.osDetails(bare) == "")
+    assert(SarOps.restartTimestamps(bare).map(_.toString) ==
+      Seq("2000-01-01 00:15:30.0"))
     val section = SarOps.selectHeader(sar.toDF(), "proc/s cswch/s")
     val wide = SarOps.createMetricsDf(
       SarOps.toMetrics(section, "proc/s cswch/s"), "proc/s cswch/s")
